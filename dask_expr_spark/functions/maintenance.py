@@ -26,11 +26,20 @@ Filesystem seam (fsops.py): every filesystem touch goes through a
 TableFS — PosixFS locally, the JVM Hadoop FileSystem for hdfs://
 s3a:// gs:// abfs:// paths — and the durability protocol is chosen by
 the fs's `atomic_rename` capability.  Rename-atomic stores (POSIX,
-HDFS) use the swap above; object stores use the POINTER protocol
-(`upsert_partitioned(commit="pointer")` / `snapshot_write`): data
-files are only ever created, never renamed, and the commit point is
-one atomic small-object manifest write.  The rename protocols REFUSE
-to run on a non-atomic-rename fs rather than silently weakening.
+HDFS) use the swap above; object stores use the POINTER protocol:
+data files are only ever created, never renamed, and the commit point
+is the exclusive creation of one small `_commit.{N}.json` claim.
+
+That claim chain is the module's ONE table version log.  Its manifest
+maps entry directories to their committed files, and an entry is
+either a hive partition dir (`upsert_partitioned(commit="pointer")`,
+delete_where, overwrite_partitions) or an immutable, uniquely named
+`_v{gen}-{uid}` dir: a snapshot table (`snapshot_write`) commits each
+version as one entry that replaces the last, and the key bloom
+(`bloom_append_snapshot`) adds one segment entry per batch.  Time
+travel, CDC and vacuum are the same code for every shape.  The rename
+protocols REFUSE to run on a non-atomic-rename fs rather than silently
+weakening.
 """
 
 from __future__ import annotations
@@ -228,85 +237,66 @@ def _swap_partition_dirs(path: str, new_root: str,
 
 
 # ---------------------------------------------------------------------------
-# Pointer-commit protocol: the object-store-safe alternative to the
-# rename swap for PARTITIONED tables.  On s3a/gs/abfs a directory
-# rename is copy+delete — not atomic, not constant-time — so the
-# rename-aside contract above does not hold.  The protocol here never
-# renames or overwrites a data file:
+# Pointer-commit protocol: the table version log, and the
+# object-store-safe alternative to the rename swap (on s3a/gs/abfs a
+# directory rename is copy+delete — not atomic, not constant-time).
+# No data file is ever renamed or overwritten:
 #
-#   1. the replacement slice APPENDS into the live partition dirs
-#      (Spark writes fresh uniquely-named files; old files untouched);
-#   2. per touched partition directory, the new committed file list is
-#      recorded — INLINE in the root manifest for small directories,
-#      or (above MANIFEST_INLINE_MAX files) in a fresh uniquely-named
-#      `_files.<id>.json` SHARD inside the directory, so the root
-#      manifest stays O(#dirs) however many files the table holds and
-#      a commit writes only the touched dirs' shards;
-#   3. the COMMIT POINT is the exclusive creation of the root claim
-#      file `_commit.<generation>.json` (the full root manifest) —
-#      fsops.write_text_exclusive, the protocol's compare-and-swap:
-#      exactly one writer claims generation N+1.  A concurrent writer
-#      that read the same base generation loses the claim and raises
-#      ConcurrentCommitError; its appended data files and manifest
-#      shards are unreferenced orphans that vacuum_manifested clears.
+#   1. new data lands as fresh uniquely-named files: a merge slice
+#      APPENDS into the live hive partition dirs, and a snapshot
+#      version or bloom segment writes one new `_v{gen}-{uid}` ENTRY
+#      dir (_commit_entry);
+#   2. each touched entry dir's committed file list is recorded INLINE
+#      in the root manifest, or above MANIFEST_INLINE_MAX files in a
+#      fresh `_files.<id>.json` SHARD inside the dir — the root stays
+#      O(#dirs) and a commit writes only the touched dirs' shards;
+#   3. the COMMIT POINT is the exclusive creation of the claim
+#      `_commit.<generation>.json` (the full root manifest) —
+#      fsops.write_text_exclusive, the compare-and-swap: exactly one
+#      writer claims generation N+1; a loser rebases or raises (below),
+#      and its unreferenced files are orphans vacuum_manifested clears.
 #      (Delta's _delta_log/N.json, in miniature.)
 #
-# `_commit.json` (no generation) survives as a best-effort POINTER
-# CACHE, refreshed after each successful claim; readers resolve the
-# true head by probing claim files forward from the cached generation
-# (read_commit), so a crash between claim and cache refresh loses
-# nothing.  A crash anywhere leaves the previous generation live and
-# fully readable.  Readers use read_manifested (a plain directory scan
-# would see orphans and superseded files — the price of object-store
-# correctness, same as Delta/Iceberg).
+# `_commit.json` is a best-effort POINTER CACHE refreshed after each
+# claim; read_commit probes claims forward from it, so a crash between
+# claim and refresh loses nothing, and a crash anywhere leaves the
+# previous generation live.  Readers use read_manifested: a directory
+# scan would see orphans and superseded files.
 #
 # CONCURRENCY CONTRACT (every pointer entry point): commits are
-# optimistic and serialize on the root claim; each claim records the
-# partition dirs it `touched`.  A writer that loses the claim REBASES
-# instead of recomputing when it safely can (Delta's logical conflict
-# detection in miniature): it walks the intervening claims, and if
-# every one touched only dirs DISJOINT from its own, it overlays its
-# dir entries onto the new head's manifest and re-claims the next
-# generation — no data job re-runs, both writers' partitions land.
-# Any overlap (or an intervening claim without touched metadata)
-# raises ConcurrentCommitError: the loser's mutation was computed
-# against a stale view of a dir the winner changed, so it must re-run
-# against the new head.  Pass rebase=False for strict single-log
-# serialization (every same-base concurrent commit conflicts).
+# optimistic and serialize on the claim; each claim records the entry
+# dirs it `touched`.  A loser whose intervening claims all touched
+# DISJOINT dirs REBASES — overlays its entries onto the new head and
+# claims the next generation, re-running no data job (Delta's logical
+# conflict detection in miniature).  Any overlap, or an intervening
+# claim without touched metadata, raises ConcurrentCommitError: the
+# mutation must re-run against the new head.  rebase=False gives
+# strict single-log serialization.  A claim re-created below the head
+# (a vacuum retired it mid-walk) is withdrawn, and raises as well.
 #
-# Isolation note (same level as Delta's WriteSerializable): a rebased
-# commit is snapshot-correct per partition dir, but CROSS-partition
-# read-check invariants — the upsert move guard's "this key exists in
-# no other partition" — were verified against the writer's BASE
-# snapshot, not the head it rebased onto.  Two concurrent writers
-# inserting the same brand-new key into different partitions can
-# therefore both land (the anomaly class WriteSerializable permits);
-# deployments that need the guard serialized use rebase=False and
-# re-run losers.  The CAS is as strong as the store's exclusive
-# create: atomic on POSIX (hard-link publish) and HDFS (rename-onto-
-# existing fails); on object stores it is the connector's
-# create(overwrite=false) — a true conditional PUT where supported
-# (see fsops.write_text_exclusive).
+# Isolation (Delta's WriteSerializable): a rebased commit is correct
+# per dir, but CROSS-dir read checks — the upsert move guard's "this
+# key exists in no other partition" — ran against the writer's BASE,
+# so two writers inserting one brand-new key into different
+# partitions can both land; use rebase=False and re-run losers where
+# that matters.  The CAS is as strong as the store's exclusive create:
+# atomic on POSIX (hard-link publish) and HDFS (rename-onto-existing
+# fails), a conditional PUT on object stores that support one.
 #
-# Partition specs: `partition_col` accepts a single column (string)
-# or a LIST for multi-level hive layouts (date=…/source=…) — manifest
-# keys become '/'-joined relative dir paths and every pointer-path
-# operation (bootstrap, upsert, overwrite, delete_where, compaction,
-# vacuum, pruned reads) handles both.  Multi-column specs are
-# POINTER-PROTOCOL ONLY: the rename swap's per-partition crash
-# recovery is single-level by design (use a composite value there, or
-# switch the table to pointer commits).
+# Partition specs: `partition_col` is one column or a LIST for
+# multi-level hive layouts (date=…/source=…, manifest keys
+# '/'-joined); every pointer operation handles both, and multi-column
+# specs are POINTER-ONLY (the rename swap's recovery is single-level).
+# Entry tables (snapshots, the key bloom) record `partition_col: None`;
+# their entries are immutable, so vacuum removes a retired entry whole.
 #
-# Scope of the no-rename guarantee: it covers this layer — the TABLE
-# commit (claim + shards, all small objects only ever created) and
-# every driver-side operation.  The appends themselves go through
-# Spark's configured output committer, and the default
-# FileOutputCommitter still renames task output JVM-side (copy+delete
-# on S3); on real object stores configure the store's rename-free
-# committer (e.g. the S3A "magic" committer / cloud-first committers)
-# — correctness holds either way, since files invisible to the
-# manifest are just orphans, but the performance claim needs the
-# committer configured to match.
+# Scope of the no-rename guarantee: the TABLE commit (claim + shards,
+# small objects only ever created) and every driver-side operation.
+# The appends go through Spark's output committer, whose default
+# FileOutputCommitter still renames task output JVM-side; on object
+# stores configure a rename-free committer (e.g. S3A "magic") —
+# correctness holds either way (invisible files are orphans), the
+# performance claim needs the committer.
 # ---------------------------------------------------------------------------
 
 _COMMIT = "_commit.json"
@@ -321,6 +311,10 @@ _COMMIT = "_commit.json"
 MANIFEST_INLINE_MAX = 16
 
 _CLAIM_RE = re.compile(r"^_commit\.(\d{8})\.json$")
+
+# an entry dir of a snapshot or bloom table: `_v{gen}-{uid}`, named
+# for the generation its writer targeted
+_ENTRY_RE = re.compile(r"^_v(\d{8})(?:-[0-9a-f]+)?$")
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -363,7 +357,9 @@ def _norm_pcols(partition_col) -> list[str]:
 
 
 def _man_pcols(man: dict) -> list[str]:
-    return _norm_pcols(man["partition_col"])
+    """The manifest's partition columns; [] for an entry table."""
+    pc = man.get("partition_col")
+    return [] if pc is None else _norm_pcols(pc)
 
 
 def _hive_part_path(pcols: list[str], values) -> str:
@@ -412,13 +408,10 @@ def read_commit(path: str, fs=None) -> dict | None:
     if fs.exists(cp):
         man = json.loads(fs.read_text(cp))
     else:
-        if not fs.isdir(path):
-            return None
-        gens = [int(m.group(1)) for m in
-                (_CLAIM_RE.match(e) for e in fs.listdir(path)) if m]
+        gens = manifest_generations(path, fs=fs)
         if not gens:
             return None
-        man = json.loads(fs.read_text(_claim_file(path, max(gens))))
+        man = json.loads(fs.read_text(_claim_file(path, gens[-1])))
     g = int(man["generation"])
     while fs.exists(_claim_file(path, g + 1)):
         g += 1
@@ -435,16 +428,14 @@ def _write_commit(path: str, man: dict, fs, touched=None,
     (the CAS — exactly one writer wins each generation), then refresh
     the `_commit.json` pointer cache.
 
-    `touched` is the list of partition-dir keys this commit changed;
-    it is recorded in the claim so LATER writers can conflict-check
-    against it.  When the claim is lost and `rebase` is true, the
-    commit rebases (see the module CONCURRENCY CONTRACT): if the
-    winning claim touched only disjoint dirs, this commit's entries
-    overlay the winner's manifest and the next generation is claimed
-    — walking one intervening generation per loop turn, so a chain of
-    disjoint winners costs one read+re-claim each, never a data
-    recompute.  Overlapping dirs (or a winner without touched
-    metadata, or touched=None here) raise ConcurrentCommitError.
+    `touched` lists the entry dirs this commit changed, recorded in
+    the claim so LATER writers can conflict-check against it.  A lost
+    claim with `rebase` true and a winner that touched only disjoint
+    dirs overlays this commit's entries onto the winner's manifest and
+    claims the next generation (module CONCURRENCY CONTRACT) — one
+    read+re-claim per intervening winner, never a data recompute.
+    Overlapping dirs (or a winner without touched metadata, or
+    touched=None here) raise ConcurrentCommitError.
     Returns the manifest that actually committed (== `man` unless a
     rebase merged it onto a newer head)."""
     if touched is not None:
@@ -486,6 +477,15 @@ def _write_commit(path: str, man: dict, fs, touched=None,
                    "touched": man["touched"],
                    "generation": gen + 1}
             continue
+        if gen > 0 and not fs.exists(_claim_file(path, gen - 1)):
+            # a vacuum retired claims up to and past `gen` while this
+            # writer walked towards it (vacuum deletes oldest-first), so
+            # the claim just re-created sits below the head, invisible
+            fs.delete(_claim_file(path, gen))
+            raise ConcurrentCommitError(
+                f"pointer commit: generation {gen} at {path} was "
+                "retired by a concurrent vacuum; re-run the mutation "
+                "against the new head")
         # best-effort pointer cache (read_commit probes forward from
         # it, so losing a race on THIS unconditional write is harmless)
         fs.write_text_atomic(_commit_file(path), text)
@@ -532,13 +532,6 @@ def manifest_files(man: dict, path: str, fs=None,
             for d in names
             if d in man["partitions"]
             for f in _dir_files(man, path, d, fs)]
-
-
-def _table_has_files(man: dict, path: str, fs) -> bool:
-    """True when any dir entry holds at least one committed file
-    (a `@shard` entry is never written for an empty list)."""
-    return any(isinstance(e, str) or e
-               for e in man["partitions"].values())
 
 
 _UNREAD = object()
@@ -618,17 +611,105 @@ def manifest_bootstrap(path: str, partition_col: str | list[str],
                          rebase=False)
 
 
+def _pointer_base(path: str, partition_col, man: dict | None, fs,
+                  op: str) -> dict:
+    """The manifest a pointer mutation builds on: head `man`, a plain
+    hive table adopted by manifest_bootstrap, or — no table yet — an
+    empty generation -1, so the mutation commits generation 0."""
+    if man is None and fs.isdir(path):
+        man = manifest_bootstrap(path, partition_col, fs=fs)
+    elif man is None:
+        man = {"generation": -1, "partitions": {},
+               "partition_col": (partition_col
+                                 if isinstance(partition_col, str)
+                                 else list(partition_col))}
+    if _man_pcols(man) != _norm_pcols(partition_col):
+        raise ValueError(
+            f"{op}: table at {path} is committed on "
+            f"{man['partition_col']}, not {partition_col}")
+    return man
+
+
 def manifest_generations(path: str, fs=None) -> list[int]:
     """The pointer table's surviving generation numbers (its version
     log): every `_commit.{N}.json` claim still on disk, sorted.  The
     head is the max; older entries serve time travel
     (read_manifested(generation=N)) until vacuum_manifested retires
-    them past its `keep_claims` window."""
+    them past its `keep_claims` window.
+
+    A directory holding `_manifest*.json` files and no claim is a
+    snapshot table of the retired second log; it is refused, not
+    read as empty."""
     fs = _resolve_fs(path, fs)
     if not fs.isdir(path):
         return []
-    return sorted(int(m.group(1)) for m in
-                  (_CLAIM_RE.match(e) for e in fs.listdir(path)) if m)
+    names = fs.listdir(path)
+    gens = sorted(int(m.group(1)) for m in map(_CLAIM_RE.match, names)
+                  if m)
+    if not gens and any(n.startswith("_manifest") and n.endswith(".json")
+                        for n in names):
+        raise ValueError(
+            f"table at {path} uses the retired snapshot-log layout "
+            "(`_manifest.{n}.json` claims, no `_commit.{N}.json` claim);"
+            " re-write it with snapshot_write into a new directory")
+    return gens
+
+
+def _manifest_at(path: str, generation: int | None, fs,
+                 op: str) -> dict:
+    """The manifest `generation` committed (the head when None).
+    Raises when the path holds no pointer table, or when that
+    generation's claim was vacuumed or never written."""
+    man = read_commit(path, fs=fs)
+    if man is None:
+        raise ValueError(
+            f"{op}: no {_COMMIT} at {path} — not a pointer-commit table "
+            "(manifest_bootstrap, upsert_partitioned(commit='pointer') "
+            "or snapshot_write first)")
+    if generation is None or int(generation) == int(man["generation"]):
+        return man
+    cf = _claim_file(path, int(generation))
+    if not fs.exists(cf):
+        raise ValueError(
+            f"{op}: generation {int(generation)} not available at "
+            f"{path} (vacuumed or never committed; live generations: "
+            f"{manifest_generations(path, fs=fs)})")
+    return json.loads(fs.read_text(cf))
+
+
+def _commit_entry(path: str, df: DataFrame, fs, man: dict | None,
+                  replace: bool = False, rebase: bool = True) -> dict:
+    """Commit `df` as one new immutable entry dir `_v{gen}-{uid}` on
+    top of base `man` (None bootstraps generation 0).  The entry is
+    ADDED and touches only itself, so concurrent adds rebase and both
+    land; `replace=True` makes it the only entry, touching every base
+    entry too.  A lost claim that cannot rebase deletes the dir and
+    raises ConcurrentCommitError; an add retries once on the current
+    head first.  Returns the committed manifest."""
+    base = man or {"generation": -1, "partition_col": None,
+                   "partitions": {}}
+    gen = int(base["generation"]) + 1
+    name = f"_v{gen:08d}-{uuid.uuid4().hex[:8]}"
+    df.write.parquet(os.path.join(path, name))    # a fresh, unique dir
+    new = {**base, "generation": gen,
+           "partitions": {} if replace else dict(base["partitions"])}
+    _set_dir_files(new, path, name, _part_files(fs, path, name), fs)
+    touched = [name, *base["partitions"]] if replace else [name]
+    for retry in (False, True):
+        try:
+            return _write_commit(path, new, fs, touched=touched,
+                                 rebase=rebase)
+        except ConcurrentCommitError:
+            if replace or not rebase or retry:
+                fs.delete(os.path.join(path, name))
+                raise
+        # an add loses only to claims a fold retired mid-walk, or to
+        # contention: a fresh entry conflicts with no commit, so add
+        # it to the current head
+        head = read_commit(path, fs=fs)
+        new = {**head, "generation": int(head["generation"]) + 1,
+               "partitions": {**head["partitions"],
+                              name: new["partitions"][name]}}
 
 
 def read_manifested(spark: SparkSession, path: str, fs=None,
@@ -649,28 +730,12 @@ def read_manifested(spark: SparkSession, path: str, fs=None,
     guard against pre-commit (and read-only callers should treat as
     suspicious for non-string partition types).
 
-    `generation` time-travels to an older commit: the claim chain IS
-    a version log (Delta's _delta_log in miniature), so any
-    generation whose claim file survives — the head, plus the
-    newest `keep_claims` retained by vacuum_manifested — reads
-    exactly as it committed.  Raises on a vacuumed or never-committed
-    generation, naming the live ones."""
+    `generation` time-travels: any generation whose claim survives
+    (the head plus vacuum_manifested's `keep_claims` window) reads
+    exactly as it committed; a vacuumed or never-committed one
+    raises, naming the live ones."""
     fs = _resolve_fs(path, fs)
-    man = read_commit(path, fs=fs)
-    if man is None:
-        raise ValueError(
-            f"read_manifested: no {_COMMIT} at {path} — not a "
-            "pointer-commit table (manifest_bootstrap or "
-            "upsert_partitioned(commit='pointer') first)")
-    if generation is not None and \
-            int(generation) != int(man["generation"]):
-        cf = _claim_file(path, int(generation))
-        if not fs.exists(cf):
-            raise ValueError(
-                f"read_manifested: generation {int(generation)} not "
-                f"available at {path} (vacuumed or never committed; "
-                f"live generations: {manifest_generations(path, fs=fs)})")
-        man = json.loads(fs.read_text(cf))
+    man = _manifest_at(path, generation, fs, "read_manifested")
     dirs = None
     if partition_values is not None:
         pcols = _man_pcols(man)
@@ -693,16 +758,36 @@ def read_manifested(spark: SparkSession, path: str, fs=None,
     return spark.read.option("basePath", path).parquet(*files)
 
 
+def _append_dirs(path: str, out: DataFrame, pcols: list[str],
+                 dirs: list[str], man: dict, fs, op: str) -> int:
+    """Append `out` into the hive dirs and record each of `dirs`' new
+    files (a pre/post listing diff, so a crashed append's orphans are
+    never adopted) in the pre-claim manifest `man`.  A dir that gained
+    no file means the dir-name rendering diverged from Spark's: raise
+    BEFORE the claim.  Returns the number of new files."""
+    pre = {d: set(_part_files(fs, path, d)) for d in dirs}
+    out.write.mode("append").partitionBy(*pcols).parquet(path)
+    n = 0
+    for d in dirs:
+        fresh = sorted(set(_part_files(fs, path, d)) - pre[d])
+        if not fresh:
+            raise RuntimeError(
+                f"{op}: no new files appeared under {d!r} after append "
+                "— hive dir-name mismatch; manifest NOT flipped (table "
+                "unchanged)")
+        _set_dir_files(man, path, d, fresh, fs)
+        n += len(fresh)
+    return n
+
+
 def _append_and_flip(spark: SparkSession, path: str, df: DataFrame,
                      partition_col: str, man: dict, fs,
                      rebase: bool = True,
                      parts: list[tuple] | None = None,
                      before_claim=None) -> list[str]:
     """The pointer protocol's write half: append `df`'s partitions as
-    new files, then claim the next generation pointing at them.  New
-    files are identified by a pre/post listing diff per touched
-    directory, so orphans from a previously crashed append are never
-    adopted.  A lost claim rebases onto the new head when the
+    new files (_append_dirs), then claim the next generation pointing
+    at them.  A lost claim rebases onto the new head when the
     intervening commits touched only disjoint dirs (see
     _write_commit); otherwise — or with rebase=False — it raises
     ConcurrentCommitError (this append's files become orphans).
@@ -725,21 +810,8 @@ def _append_and_flip(spark: SparkSession, path: str, df: DataFrame,
     if not parts:
         return []
     dirs = [_hive_part_path(pcols, v) for v in parts]
-    pre = {d: set(_part_files(fs, path, d)) for d in dirs}
-    (_merge_write_layout(spark, path, df, pcols, fs)
-     .write.mode("append").partitionBy(*pcols).parquet(path))
-    for d in dirs:
-        post = _part_files(fs, path, d)
-        fresh = sorted(set(post) - pre[d])
-        if not fresh:
-            # the dir-name rendering diverged from Spark's — fail
-            # BEFORE the flip: the old manifest stays live, the
-            # appended files are vacuumable orphans, nothing corrupts
-            raise RuntimeError(
-                f"pointer commit: no new files appeared under "
-                f"{d!r} after append — hive dir-name mismatch; "
-                "manifest NOT flipped (table unchanged)")
-        _set_dir_files(man, path, d, fresh, fs)
+    _append_dirs(path, _merge_write_layout(spark, path, df, pcols, fs),
+                 pcols, dirs, man, fs, "pointer commit")
     if before_claim is not None:
         before_claim()
     man["generation"] = int(man["generation"]) + 1
@@ -748,55 +820,16 @@ def _append_and_flip(spark: SparkSession, path: str, df: DataFrame,
     return dirs
 
 
-def vacuum_manifested(path: str, fs=None,
-                      min_age_s: float = 0.0,
-                      keep_claims: int = 1) -> int:
-    """Delete data files not referenced by any RETAINED generation —
-    superseded generations and orphans of crashed or lost-race
-    appends — plus retired root claim files and unreferenced
-    `_files.*.json` manifest shards.  Run AFTER readers of older
-    generations have drained (same contract as snapshot_vacuum): a
-    reader resolving an already-retired claim mid-vacuum can lose its
-    files.
-
-    `keep_claims` is the time-travel retention window: the newest N
-    claim files at or below the head survive, and every data file and
-    shard any of them references stays readable — so
-    read_manifested(generation=...) and manifested_cdc keep working
-    across vacuums for the retained window (the claim chain is the
-    version log).  The default 1 retains only the head, the historic
-    behavior.  Claims NEWER than the head this vacuum resolved are
-    never touched: they belong to a writer that committed mid-vacuum,
-    and deleting them would erase an acknowledged commit.
-
-    `min_age_s` is the CONCURRENT-WRITER guard (the Delta/Iceberg
-    retention window): an in-flight writer's freshly appended files
-    are unreferenced until its claim lands, so a vacuum racing it
-    would delete them and the subsequent flip would commit a manifest
-    pointing at missing files.  Files — and retired claim files, same
-    race — younger than `min_age_s` are kept regardless of reference
-    state; deployments with concurrent writers should pass a window
-    comfortably above the longest append (e.g. 3600).  The default 0
-    keeps single-writer vacuums eager.  Returns the number of DATA
-    files removed."""
-    import time
-
-    fs = _resolve_fs(path, fs)
-    man = read_commit(path, fs=fs)
-    if man is None:
-        return 0
+def _retire_claims(path: str, fs, man: dict, keep_claims: int = 1,
+                   old_enough=lambda p: True) -> list[dict]:
+    """Delete the claims below head `man` outside the newest
+    `keep_claims` (and younger than `old_enough` allows), oldest
+    first; claims above the head belong to concurrent writers and
+    stay.  Returns the retained generations' manifests."""
     cur_gen = int(man["generation"])
-    cutoff = time.time() - float(min_age_s)
-
-    def old_enough(p: str) -> bool:
-        return min_age_s <= 0 or fs.getmtime(p) <= cutoff
-
-    # retained generations: the newest keep_claims at or below the
-    # head, plus anything newer (a concurrent writer's commit)
     gens = manifest_generations(path, fs=fs)
-    keep_claims = max(1, int(keep_claims))
     at_or_below = [g for g in gens if g <= cur_gen]
-    retained = (set(at_or_below[-keep_claims:])
+    retained = (set(at_or_below[-max(1, int(keep_claims)):])
                 | {g for g in gens if g > cur_gen} | {cur_gen})
     # refresh the pointer cache BEFORE dropping older claims — probe-
     # forward readers must never start from a generation whose
@@ -818,14 +851,67 @@ def vacuum_manifested(path: str, fs=None,
     # liveness = union over every retained generation's manifest
     mans = []
     for g in sorted(retained):
+        cf = _claim_file(path, g)
         if g == cur_gen:
             mans.append(man)
-        else:
-            cf = _claim_file(path, g)
-            if fs.exists(cf):
-                mans.append(json.loads(fs.read_text(cf)))
+        elif fs.exists(cf):
+            mans.append(json.loads(fs.read_text(cf)))
+    return mans
+
+
+def vacuum_manifested(path: str, fs=None,
+                      min_age_s: float = 0.0,
+                      keep_claims: int = 1) -> int:
+    """Delete data files no RETAINED generation references —
+    superseded generations and orphans of crashed or lost-race writes
+    — plus retired claims and unreferenced `_files.*.json` shards; on
+    an entry table (snapshots, the key bloom), every unreferenced `_v*`
+    entry dir.  Run AFTER readers of older generations have drained: a
+    reader resolving a retired claim mid-vacuum can lose its files.
+
+    `keep_claims` is the time-travel window: the newest N claims at or
+    below the head survive with every file they reference, so
+    read_manifested(generation=...) and manifested_cdc keep working
+    across vacuums.  The default 1 retains only the head.  Claims NEWER
+    than the resolved head belong to a writer that committed
+    mid-vacuum and are never touched.
+
+    `min_age_s` is the CONCURRENT-WRITER guard (the Delta/Iceberg
+    retention window): an in-flight writer's new files are
+    unreferenced until its claim lands, and deleting them would let it
+    commit a manifest of missing files.  Files and retired claims
+    younger than `min_age_s` are kept; deployments with concurrent
+    writers should pass a window above the longest append (e.g. 3600).
+    The default 0 keeps single-writer vacuums eager.  Returns the
+    number of DATA files removed."""
+    import time
+
+    fs = _resolve_fs(path, fs)
+    man = read_commit(path, fs=fs)
+    if man is None:
+        return 0
+    cur_gen = int(man["generation"])
+    cutoff = time.time() - float(min_age_s)
+
+    def old_enough(p: str) -> bool:
+        return min_age_s <= 0 or fs.getmtime(p) <= cutoff
+
+    mans = _retire_claims(path, fs, man, keep_claims, old_enough)
     removed = 0
     pcols = _man_pcols(man)
+    if not pcols:
+        # entry table: an entry dir no retained generation references
+        # is retired or an orphan, and goes whole.  Dirs named for a
+        # generation above the head belong to an in-flight writer.
+        live = set().union(*(m["partitions"] for m in mans))
+        for d in fs.listdir(path):
+            em = _ENTRY_RE.match(d)
+            dp = os.path.join(path, d)
+            if (em and d not in live and int(em.group(1)) <= cur_gen
+                    and old_enough(dp)):
+                removed += len(_part_files(fs, path, d))
+                fs.delete(dp)
+        return removed
 
     def _rm(fp: str) -> None:
         fs.delete(fp)
@@ -887,6 +973,10 @@ def compact_manifested(spark: SparkSession, path: str,
             f"compact_manifested: no {_COMMIT} at {path} — for "
             "rename-protocol tables use compact_parquet")
     pcols = _man_pcols(man)
+    if not pcols:
+        raise ValueError(
+            f"compact_manifested: {path} is an entry table (snapshot "
+            "or key bloom), whose entries are immutable")
     chunk = target_mb * 1024 * 1024
     plan: dict[str, int] = {}
     files_before = 0
@@ -931,17 +1021,9 @@ def compact_manifested(spark: SparkSession, path: str,
            .repartition(sum(plan.values()),
                         *[F.col(c) for c in pcols], F.col("__salt"))
            .drop("__salt"))
-    pre = {d: set(_part_files(fs, path, d)) for d in plan}
-    out.write.mode("append").partitionBy(*pcols).parquet(path)
-    files_after = files_before
-    for d in plan:
-        fresh = sorted(set(_part_files(fs, path, d)) - pre[d])
-        if not fresh:
-            raise RuntimeError(
-                f"compact_manifested: no new files under {d!r} after "
-                "append; manifest NOT flipped (table unchanged)")
-        files_after += len(fresh) - len(dir_files[d])
-        _set_dir_files(man, path, d, fresh, fs)
+    files_after = files_before - sum(len(dir_files[d]) for d in plan) \
+        + _append_dirs(path, out, pcols, sorted(plan), man, fs,
+                       "compact_manifested")
     man["generation"] = int(man["generation"]) + 1
     _write_commit(path, man, fs, touched=sorted(plan), rebase=rebase)
     _refresh_zonemap_if_present(spark, path, fs)
@@ -1151,11 +1233,12 @@ def upsert_partitioned(spark: SparkSession, path: str, updates: DataFrame,
     probes the batch keys map-only and falls back to the column-pruned
     full-table key scan ONLY for bloom maybe-hits, so the per-batch
     guard cost scales with the batch, not the table.  Under
-    commit="pointer" the bloom index itself commits through the
-    snapshot CAS protocol (bloom_append_snapshot — object-store-safe,
+    commit="pointer" the bloom index itself is a pointer-log entry
+    table (bloom_append_snapshot — object-store-safe,
     auto-bootstrapped on first guarded upsert), updated BEFORE the
     table claim so every failure mode errs on harmless extra bloom
-    keys, never a false negative.  Disable
+    keys, never a false negative; concurrent guarded upserts on
+    disjoint partitions rebase both commits and share it.  Disable
     check_moves only where the invariant holds by construction
     (upsert_bucketed does: its partition value is a function of the
     key).  Returns the list of partition values rewritten.
@@ -1200,33 +1283,11 @@ def upsert_partitioned(spark: SparkSession, path: str, updates: DataFrame,
     if not parts:
         return []
     if commit == "pointer":
-        if man is None:
-            if fs.isdir(path):
-                man = manifest_bootstrap(path, partition_col, fs=fs)
-            else:
-                # bootstrap write: same in-batch duplicate-key
-                # resolution as the merge path (order_col max_by)
-                out = upsert(updates.where(F.lit(False)), updates,
-                             keys, order_col=order_col)
-                (out.hint("rebalance", *pcols)  # guide §6
-                 .write.mode("overwrite")
-                 .partitionBy(*pcols).parquet(path))
-                manifest_bootstrap(path, partition_col, fs=fs)
-                if key_bloom_path is not None:
-                    bloom_append_snapshot(spark, key_bloom_path,
-                                          out, keys)
-                # parts from the DEDUPED frame: order_col resolution
-                # can eliminate a value's only rows
-                if multi:
-                    return [tuple(r) for r in out.select(*pcols)
-                            .distinct().collect()]
-                return [r[0] for r in out.select(partition_col)
-                        .distinct().collect()]
-        if _man_pcols(man) != pcols:
-            raise ValueError(
-                f"upsert_partitioned: table at {path} is committed on "
-                f"{man['partition_col']}, not {partition_col}")
-        if _table_has_files(man, path, fs):
+        man = _pointer_base(path, partition_col, man, fs,
+                            "upsert_partitioned")
+        # any non-empty entry (a `@shard` is never written empty)
+        has_files = any(man["partitions"].values())
+        if has_files:
             # the target reads ONLY the touched partitions' committed
             # files (manifest pruning): the driver-side file list is
             # bounded by the batch's partitions, not the table.  The
@@ -1237,12 +1298,13 @@ def upsert_partitioned(spark: SparkSession, path: str, updates: DataFrame,
             def full_fn():
                 return read_manifested(spark, path, fs=fs)
         else:
-            # table deleted empty (possibly vacuumed to nothing):
+            # new, or deleted empty (possibly vacuumed to nothing):
             # insert-only merge, no files to read or guard against
             target = updates.where(F.lit(False))
             def full_fn():
                 return target
-        if check_moves and keys and not all(c in keys for c in pcols):
+        if check_moves and has_files and keys and \
+                not all(c in keys for c in pcols):
             _check_partition_moves(spark, full_fn, target,
                                    updates, keys,
                                    "/".join(pcols), key_bloom_path)
@@ -1285,12 +1347,16 @@ def upsert_partitioned(spark: SparkSession, path: str, updates: DataFrame,
         #
         # without order_col the merge drops no update row, so the
         # merged frame's partition set is exactly `parts` — pass it
-        # down and the flip skips its own distinct().collect(), a
-        # full second computation of the merge (guide §2.4).  With
+        # down and the flip skips a distinct().collect(), a full
+        # second computation of the merge (guide §2.4).  With
         # order_col, cross-partition duplicate keys can eliminate a
-        # value's only rows — let the flip derive the true set.
-        known = None if order_col is not None else \
-            (parts if multi else [(p,) for p in parts])
+        # value's only rows — derive the true set, and return it.
+        if order_col is None:
+            known = parts if multi else [(p,) for p in parts]
+        else:
+            known = [tuple(r) for r in
+                     merged.select(*pcols).distinct().collect()]
+            parts = known if multi else [v for (v,) in known]
         try:
             _append_and_flip(spark, path, merged, partition_col, man,
                              fs, rebase=rebase, parts=known,
@@ -1435,8 +1501,8 @@ def bloom_append(spark: SparkSession, bloom_path: str, delta: DataFrame,
             build_key_bloom(spark, table_path, keys, bloom_path, fpp=fpp)
         return
     idx = spark.read.parquet(bloom_path)
-    if "hash" not in idx.columns or \
-            idx.select("hash").first()["hash"] != BF_HASH:
+    row = _bloom_params(idx)
+    if row is None or row["hash"] != BF_HASH:
         # the on-disk index was built under a previous hash family
         # (pre-stamp md5 era): OR-ing an xxhash64 delta into its
         # bitmaps would leave present keys probing FALSE — a silent
@@ -1455,7 +1521,6 @@ def bloom_append(spark: SparkSession, bloom_path: str, delta: DataFrame,
                          lambda p: rebuilt.write.mode("overwrite")
                          .parquet(p))
         return
-    row = idx.select("m_bits", "k", "shards").first()
     delta_idx = bloom_index(
         delta.select(_key_str(keys).alias("__k")), "__k",
         params=(int(row["m_bits"]), int(row["k"]), int(row["shards"])))
@@ -1464,47 +1529,69 @@ def bloom_append(spark: SparkSession, bloom_path: str, delta: DataFrame,
                      lambda p: merged.write.mode("overwrite").parquet(p))
 
 
+def _bloom_params(idx: DataFrame):
+    """The index's (hash, m_bits, k, shards) row in one driver job;
+    None when it has no hash stamp (schema check, no job) or no rows."""
+    if "hash" not in idx.columns:
+        return None
+    return idx.select("hash", "m_bits", "k", "shards").first()
+
+
 def read_key_bloom(spark: SparkSession, bloom_path: str):
     """The current key-bloom index frame, whichever commit protocol
-    the bloom lives under: a SNAPSHOT table (the pointer-table flow —
-    object-store-safe, no renames) or a plain parquet dir maintained
-    by atomic_overwrite (the rename flow).  None when absent — the
-    guard then falls back to the exact full-table key scan.
+    the bloom lives under: a pointer-log entry table (the pointer-table
+    flow — object-store-safe, no renames) or a plain parquet dir
+    maintained by atomic_overwrite (the rename flow).  None when
+    absent or stale — the guard then falls back to the exact
+    full-table key scan.
 
-    Under the snapshot protocol the live versions are an LSM-style
-    SEGMENT LIST (bloom_append_snapshot): version 0 is the bootstrap
-    index (dense bitmaps), later versions are per-batch SPARSE delta
-    segments (set-bit position arrays).  The probe needs one dense
-    bitmap row per shard, so multi-segment reads fold through
-    bloom_fold_segments — OR is idempotent and monotone, so any mix
-    of segments (including a pre-segmentation layout's two
-    overlapping full versions) folds to exactly the index of the
-    union of their key sets."""
-    if _read_manifest(bloom_path) is not None:
-        hist = snapshot_history(bloom_path)
-        if len(hist) == 1:
-            idx = snapshot_read(spark, bloom_path)
-            return idx if "hash" in idx.columns else None
-        from .sketches import bloom_fold_segments
-        dirs = [_snap_dir(bloom_path, e) for e in hist]
-        seg = spark.read.option("mergeSchema", "true").parquet(*dirs)
-        # hash-stamp gate (ADVICE r10): an index persisted under a
-        # previous hash family (pre-stamp md5 era) probes FALSE for
-        # present keys under the current hashes — refuse it and let
-        # the guard fall back to the exact full-table key scan.  The
-        # schema check is free; a mixed old/new segment list cannot
-        # arise because the append paths rebuild rather than append
-        # onto a stale index.
-        if "hash" not in seg.columns:
-            return None
-        # checkpoint the fold: every probe consumes the index twice
-        # (params row + the broadcast build), and left lazy the
-        # segment fold would re-run per consumer
-        return bloom_fold_segments(seg).localCheckpoint(eager=False)
-    if _resolve_fs(bloom_path, None).isdir(bloom_path):
-        idx = spark.read.parquet(bloom_path)
-        return idx if "hash" in idx.columns else None
-    return None
+    A pointer-log head is an LSM-style SEGMENT LIST
+    (bloom_append_snapshot): a dense index plus per-batch SPARSE delta
+    segments.  The probe needs one dense bitmap row per shard, so a
+    multi-entry head folds through bloom_fold_segments — OR is
+    idempotent and monotone, so any mix of entries folds to exactly
+    the index of the union of their key sets."""
+    fs = _resolve_fs(bloom_path, None)
+    man = read_commit(bloom_path, fs=fs)
+    if man is None:
+        files = [bloom_path] if fs.isdir(bloom_path) else []
+    else:
+        files = manifest_files(man, bloom_path, fs=fs)
+    if not files:
+        return None
+    single = man is None or len(man["partitions"]) == 1
+    reader = spark.read if single else \
+        spark.read.option("mergeSchema", "true")
+    idx = reader.parquet(*files)
+    # hash-stamp gate (ADVICE r10): an index persisted under a previous
+    # hash family (pre-stamp md5 era) probes FALSE for present keys
+    # under the current hashes — refuse it.  The schema check is free;
+    # a mixed old/new segment list cannot arise because the append
+    # path rebuilds rather than appends onto a stale index.
+    if "hash" not in idx.columns:
+        return None
+    if single:
+        return idx
+    from .sketches import bloom_fold_segments
+    # checkpoint the fold: every probe consumes the index twice
+    # (params row + the broadcast build), and left lazy the segment
+    # fold would re-run per consumer
+    return bloom_fold_segments(idx).localCheckpoint(eager=False)
+
+
+def _retire_entries(path: str, fs, man: dict, dirs) -> None:
+    """After committed manifest `man` replaced the entry dirs `dirs`:
+    retire the claims below it, then delete exactly those dirs.  The
+    unclaimed entry of an in-flight writer is never touched (its claim
+    rebases onto `man`); crash orphans wait for vacuum_manifested."""
+    _retire_claims(path, fs, man)
+    for d in dirs:
+        fs.delete(os.path.join(path, d))
+
+
+# Sparse segments a bloom head may hold before an append folds them
+# into one dense entry (module-level so tests can force a fold).
+BLOOM_SEG_MAX = 8
 
 
 def bloom_append_snapshot(spark: SparkSession, bloom_path: str,
@@ -1512,272 +1599,142 @@ def bloom_append_snapshot(spark: SparkSession, bloom_path: str,
                           table_fn=None,
                           fpp: float = 0.01,
                           expected: int | None = None) -> None:
-    """Snapshot-committed twin of bloom_append for POINTER-commit
-    tables: the bloom index itself commits through the snapshot CAS
-    protocol (new immutable `_v*` dir + exclusive `_manifest.{n}.json`
-    claim — never a rename), so `upsert_partitioned(commit='pointer',
-    key_bloom_path=...)` works on object stores too.
+    """Pointer-log twin of bloom_append for POINTER-commit tables: the
+    bloom index is itself a pointer-log entry table (never a rename),
+    so `upsert_partitioned(commit='pointer', key_bloom_path=...)` works
+    on object stores too.
 
     Ordering contract (the caller's): the bloom is updated BEFORE the
-    table's generation claim.  Every failure mode then errs on EXTRA
-    bloom keys — a crash between bloom write and claim, or a claim
-    lost to a concurrent writer, leaves keys in the bloom that never
-    reached the table, which only costs spurious maybe-hits (an exact
-    scan); the reverse order could leave table keys missing from the
-    bloom, and a bloom false negative silently skips the move guard.
-    First call (no snapshot yet) bootstraps the bloom from the
-    `table_fn()` frame's keys plus the batch — a thunk, so the
-    steady state never even builds the full-table frame.
+    table's generation claim, so every failure mode errs on EXTRA
+    bloom keys (spurious maybe-hits, i.e. an exact scan), never on a
+    table key missing from the bloom — a false negative would silently
+    skip the move guard.  The first call bootstraps a dense index from
+    the `table_fn()` keys (a thunk, never built in the steady state)
+    plus the batch; a stale-hash index is rebuilt the same way.
 
-    Later calls append the batch as an LSM-STYLE SPARSE SEGMENT: only
-    the batch's set-bit positions commit as the next snapshot version
-    — an O(batch·k) write, where the pre-round-10 shape re-read and
-    re-wrote the whole merged dense index every commit (O(table
-    bits): ~2.4 s per guarded upsert at 1.5M keys, and gigabytes per
-    commit at the 100 TB key counts).  Readers (read_key_bloom) fold
-    the live segments per shard; once the segment list exceeds
-    $SPARK_GRAFT_BLOOM_SEG_MAX (default 8) the segments fold into one
-    dense version and older versions retire — classic LSM
-    compaction, amortizing the O(table) rewrite over SEG_MAX batches.
-    Every step keeps the ordering contract: a crash after the segment
-    write leaves extra bloom keys (harmless maybe-hits), never a
-    missing one."""
+    Later calls ADD the batch as a SPARSE SEGMENT entry (O(batch·k)
+    set-bit positions, not an O(table bits) rewrite) that touches only
+    itself, so appends from concurrent disjoint upserts rebase and
+    both land.  Past BLOOM_SEG_MAX entries, one dense fold replaces
+    them all and retires the older claims and exactly the entries it
+    replaced — LSM compaction, amortized over BLOOM_SEG_MAX batches.
+    A fold that loses a claim race is skipped: the segments are still
+    correct.  Dense builds (bootstrap, stale-hash rebuild) never
+    rebase: a racing loser raises ConcurrentCommitError."""
     from .sketches import (BF_HASH, bloom_delta_segment,
                            bloom_fold_segments, bloom_index)
-    man = _read_manifest(bloom_path)
-    if man is None:
-        kdf = delta.select(_key_str(keys).alias("__k"))
-        if table_fn is not None:
-            kdf = table_fn().select(_key_str(keys).alias("__k")) \
-                .unionByName(kdf)
-        snapshot_write(bloom_index(kdf, "__k", fpp=fpp,
-                                   expected=expected), bloom_path)
-        snapshot_vacuum(bloom_path, keep=2)
-        return
-    cur = snapshot_read(spark, bloom_path)
-    if "hash" not in cur.columns or \
-            cur.select("hash").first()["hash"] != BF_HASH:
-        # stale hash family (pre-stamp md5 era): a sparse xxhash64
-        # segment appended onto it would mix hash spaces and the fold
-        # would probe FALSE for keys only in the old bitmaps.
-        # Re-bootstrap under the current hash instead (table ∪ batch
-        # keys) and retire the stale versions.
-        if table_fn is None:
+    fs = _resolve_fs(bloom_path, None)
+    man = read_commit(bloom_path, fs=fs)
+    batch = delta.select(_key_str(keys).alias("__k"))
+    row = None
+    if man is not None:
+        # params from the newest entry (entry names sort by generation)
+        row = _bloom_params(spark.read.parquet(*manifest_files(
+            man, bloom_path, fs=fs, dirs=[max(man["partitions"])])))
+    if row is None or row["hash"] != BF_HASH:
+        if man is not None and table_fn is None:
+            # stale hash family (pre-stamp md5 era): an xxhash64
+            # segment appended onto it would mix hash spaces
             raise ValueError(
                 f"bloom index at {bloom_path} predates hash stamp "
                 f"{BF_HASH!r} and no table_fn was given to rebuild "
                 f"from; rebuild it explicitly")
-        kdf = table_fn().select(_key_str(keys).alias("__k")) \
-            .unionByName(delta.select(_key_str(keys).alias("__k")))
-        snapshot_write(bloom_index(kdf, "__k", fpp=fpp,
-                                   expected=expected), bloom_path)
-        snapshot_vacuum(bloom_path, keep=1)
+        kdf = batch if table_fn is None else \
+            table_fn().select(_key_str(keys).alias("__k")).unionByName(batch)
+        # never rebased: two racing dense builds can size m_bits and
+        # shards differently, and such indexes cannot be OR-folded
+        new = _commit_entry(bloom_path,
+                            bloom_index(kdf, "__k", fpp=fpp,
+                                        expected=expected),
+                            fs, man, replace=man is not None, rebase=False)
+        if man is not None:
+            _retire_entries(bloom_path, fs, new, man["partitions"])
         return
-    row = cur.select("m_bits", "k", "shards").first()
     seg = bloom_delta_segment(
-        delta.select(_key_str(keys).alias("__k")), "__k",
+        batch, "__k",
         params=(int(row["m_bits"]), int(row["k"]), int(row["shards"])))
-    snapshot_write(seg, bloom_path)
-    seg_max = int(os.environ.get("SPARK_GRAFT_BLOOM_SEG_MAX", "8"))
-    hist = snapshot_history(bloom_path)
-    if len(hist) > seg_max:
-        dirs = [_snap_dir(bloom_path, e) for e in hist]
-        # the compaction read resolves the live dirs BEFORE the new
-        # version commits, so the fold sees a stable segment set
-        snapshot_write(bloom_fold_segments(
-            spark.read.option("mergeSchema", "true").parquet(*dirs)),
-            bloom_path)
-        snapshot_vacuum(bloom_path, keep=1)
+    head = _commit_entry(bloom_path, seg, fs, man)
+    if len(head["partitions"]) <= BLOOM_SEG_MAX:
+        return
+    # a concurrent append that lands first survives the fold's rebase
+    folded = bloom_fold_segments(
+        spark.read.option("mergeSchema", "true")
+        .parquet(*manifest_files(head, bloom_path, fs=fs)))
+    try:
+        new = _commit_entry(bloom_path, folded, fs, head, replace=True)
+    except ConcurrentCommitError:
+        return
+    _retire_entries(bloom_path, fs, new, head["partitions"])
 
 
 # ---------------------------------------------------------------------------
-# Versioned snapshots: the manifest-pointer commit protocol (the
-# lakehouse pattern in miniature — what Delta/Iceberg do with logs and
-# manifests, expressed over plain parquet directories).  Each write is
-# a NEW immutable directory; readers resolve a tiny JSON pointer whose
-# pointer flip is atomic, so a writer crash at any point leaves the
-# previous version live and fully readable — and old versions stay
-# queryable (time travel) until vacuumed.
+# Versioned snapshots: an entry table of the pointer log whose every
+# commit replaces its one entry, so each generation is one immutable
+# version directory.  Version numbers are generations (0 first); time
+# travel, CDC and vacuum are the pointer log's own.
 # ---------------------------------------------------------------------------
-
-_MANIFEST = "_manifest.json"
-
-
-def _manifest_path(path: str) -> str:
-    return os.path.join(path, _MANIFEST)
-
-
-_SNAP_CLAIM_RE = re.compile(r"^_manifest\.(\d{8})\.json$")
-
-
-def _snap_claim(path: str, n: int) -> str:
-    return os.path.join(path, f"_manifest.{int(n):08d}.json")
-
-
-def _snap_dir(path: str, entry: dict) -> str:
-    """A version's data directory: the entry's recorded dir (CAS-era
-    writes use `_v{n}-{uid}` so concurrent writers can never collide
-    on a directory) or the legacy `_v{n}` default."""
-    return os.path.join(
-        path, entry.get("dir") or f"_v{int(entry['version']):08d}")
-
-
-def _read_manifest(path: str, fs=None) -> dict | None:
-    """Resolve the snapshot table's manifest: the `_manifest.json`
-    cache plus any newer `_manifest.{n}.json` claims probed FORWARD
-    (the claims are the commit points; the cache is an optimization
-    refreshed after each claim).  A missing cache recovers the full
-    version list from one root listing of claim files."""
-    fs = _resolve_fs(path, fs)
-    mp = _manifest_path(path)
-    if fs.exists(mp):
-        man = json.loads(fs.read_text(mp))
-        n = int(man["current"])
-        while fs.exists(_snap_claim(path, n + 1)):
-            n += 1
-            man["versions"].append(
-                json.loads(fs.read_text(_snap_claim(path, n))))
-            man["current"] = n
-        return man
-    if not fs.isdir(path):
-        return None
-    gens = sorted(int(m.group(1)) for m in
-                  (_SNAP_CLAIM_RE.match(e) for e in fs.listdir(path))
-                  if m)
-    if not gens:
-        return None
-    return {"current": gens[-1],
-            "versions": [json.loads(fs.read_text(_snap_claim(path, g)))
-                         for g in gens]}
 
 
 def snapshot_write(df: DataFrame, path: str, fs=None) -> int:
     """Commit `df` as the next version of the snapshot table at
-    `path`: the data lands in a fresh immutable, UNIQUELY-NAMED
-    `_v{n}-{uid}` directory (underscore-prefixed, invisible to a naive
-    parquet scan of the root), then the version commits by EXCLUSIVE
-    creation of the `_manifest.{n}.json` claim — the same CAS as the
-    pointer-commit protocol, so two concurrent writers from the same
-    head serialize on the claim: exactly one wins version n, the loser
-    raises ConcurrentCommitError and its directory is deleted (its
-    data never became visible).  A crash at any point leaves the
-    previous version live; a crashed writer's directory is an orphan
-    snapshot_vacuum clears.  `_manifest.json` survives as a
-    probe-forward pointer cache.  Returns the committed version."""
-    import datetime
-
+    `path`: a fresh immutable `_v{n}-{uid}` directory, committed by
+    the exclusive `_commit.{n}.json` claim.  Concurrent writers from
+    one head serialize (no rebase): the loser raises
+    ConcurrentCommitError and its directory is deleted.  A crash
+    leaves the previous version live and an orphan directory that
+    snapshot_vacuum clears.  Returns the committed version."""
     fs = _resolve_fs(path, fs)
-    fs.mkdirs(path)
-    man = _read_manifest(path, fs=fs) or {"current": -1, "versions": []}
-    n = int(man["current"]) + 1
-    vdir_name = f"_v{n:08d}-{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(os.path.join(path, vdir_name))
-    entry = {"version": n, "dir": vdir_name,
-             "committed_at": datetime.datetime.now(
-                 datetime.timezone.utc).isoformat()}
-    try:
-        # the commit point: exclusive claim of version n
-        fs.write_text_exclusive(_snap_claim(path, n), json.dumps(entry))
-    except FileExistsError:
-        fs.delete(os.path.join(path, vdir_name))   # our own orphan
-        raise ConcurrentCommitError(
-            f"snapshot_write: version {n} at {path} was claimed by a "
-            "concurrent writer — this write's directory was removed "
-            "and nothing became visible; re-run against the new head"
-        ) from None
-    man["versions"].append(entry)
-    man["current"] = n
-    # best-effort pointer cache (readers probe claims forward from it)
-    fs.write_text_atomic(_manifest_path(path), json.dumps(man))
-    return n
-
-
-def _snap_entry(path: str, version: int | None, fs=None) -> dict:
-    man = _read_manifest(path, fs=fs)
-    if man is None:
-        raise ValueError(f"snapshot_read: no manifest at {path} — "
-                         "not a snapshot table (snapshot_write first)")
-    v = int(man["current"]) if version is None else int(version)
-    for entry in man["versions"]:
-        if int(entry["version"]) == v:
-            return entry
-    raise ValueError(
-        f"snapshot_read: version {v} not available at {path} "
-        f"(live versions: "
-        f"{sorted(int(e['version']) for e in man['versions'])})")
+    man = _commit_entry(path, df, fs, read_commit(path, fs=fs),
+                        replace=True, rebase=False)
+    return int(man["generation"])
 
 
 def snapshot_version_dir(path: str, version: int | None = None,
                          fs=None) -> str:
-    """The data directory of a committed version (current by default)
-    — for callers composing directly over the version's files (e.g.
-    building a zone map over one version).  Raises on vacuumed or
-    never-committed versions, same contract as snapshot_read."""
-    return _snap_dir(path, _snap_entry(path, version, fs=fs))
+    """The data directory of a committed version (current by default),
+    holding only that version's files — for callers composing over
+    them (e.g. a zone map over one version).  Raises like
+    snapshot_read."""
+    fs = _resolve_fs(path, fs)
+    [entry] = _manifest_at(path, version, fs, "snapshot_read")["partitions"]
+    return os.path.join(path, entry)
 
 
 def snapshot_read(spark: SparkSession, path: str,
                   version: int | None = None) -> DataFrame:
-    """Read the current (or a time-travel `version`) snapshot.  Raises
-    on a vacuumed or never-committed version — an orphan directory
-    from a crashed write is NOT readable, by design."""
-    return spark.read.parquet(snapshot_version_dir(path, version))
+    """Read the current (or a time-travel `version`) snapshot; raises
+    on a vacuumed or never-committed version (a crashed write's orphan
+    directory is never readable)."""
+    return read_manifested(spark, path, generation=version)
 
 
 def snapshot_history(path: str) -> list[dict]:
-    """The commit log: [{version, dir, committed_at}, …] oldest-first."""
-    man = _read_manifest(path)
-    return list(man["versions"]) if man else []
+    """The commit log, oldest-first: [{version, dir, committed_at}, …]
+    per surviving claim (committed_at = the claim's mtime)."""
+    import datetime
+
+    fs = _resolve_fs(path, None)
+    out = []
+    for g in manifest_generations(path, fs=fs):
+        cf = _claim_file(path, g)
+        [entry] = json.loads(fs.read_text(cf))["partitions"]
+        out.append({"version": g, "dir": entry,
+                    "committed_at": datetime.datetime.fromtimestamp(
+                        fs.getmtime(cf), datetime.timezone.utc).isoformat()})
+    return out
 
 
 def snapshot_vacuum(path: str, keep: int = 2, fs=None,
                     min_age_s: float = 0.0) -> list[int]:
-    """Drop all but the newest `keep` versions (never the current):
-    the pointer cache flips first (so a crash mid-delete only strands
-    directories, never dangles pointers), then the dropped versions'
-    claim files and directories go — along with ORPHAN version dirs
-    of crashed or lost-race writers (recognizable by version number
-    ≤ current and absence from the version list).
-
-    `min_age_s` guards the orphan sweep against a LIVE writer: an
-    in-flight writer targeting version n is only protected by its
-    number while n stays above `current`, and a concurrent commit of
-    n by someone else would expose its directory mid-write — so, as
-    in vacuum_manifested, orphan-looking dirs younger than the window
-    are kept.  Deployments with concurrent writers should pass a
-    window above the longest write; the default 0 keeps
-    single-writer vacuums eager.  Returns the removed version
-    numbers."""
-    import time
-
+    """Drop all but the newest `keep` versions (never the current) and
+    orphan version dirs — vacuum_manifested(keep_claims=keep), whose
+    `min_age_s` window guards a LIVE writer.  Returns the removed
+    version numbers."""
     fs = _resolve_fs(path, fs)
-    man = _read_manifest(path, fs=fs)
-    if man is None:
-        return []
-    cutoff = time.time() - float(min_age_s)
-    keep = max(1, int(keep))
-    vs = sorted(int(v["version"]) for v in man["versions"])
-    drop = set(vs[:-keep]) - {int(man["current"])}
-    dropped = [e for e in man["versions"] if int(e["version"]) in drop]
-    man["versions"] = [e for e in man["versions"]
-                       if int(e["version"]) not in drop]
-    # cache refresh BEFORE deleting claims: probe-forward readers must
-    # never start from a generation whose successors were vacuumed
-    fs.write_text_atomic(_manifest_path(path), json.dumps(man))
-    for e in dropped:
-        fs.delete(_snap_claim(path, int(e["version"])))
-        fs.delete(_snap_dir(path, e))
-    live_dirs = {os.path.basename(_snap_dir(path, e))
-                 for e in man["versions"]}
-    for d in fs.listdir(path):
-        dp = os.path.join(path, d)
-        if (d.startswith("_v") and d not in live_dirs
-                and d[2:10].isdigit()
-                and int(d[2:10]) <= int(man["current"])
-                and fs.isdir(dp)
-                and (min_age_s <= 0 or fs.getmtime(dp) <= cutoff)):
-            fs.delete(dp)
-    return sorted(drop)
+    before = manifest_generations(path, fs=fs)
+    vacuum_manifested(path, fs=fs, min_age_s=min_age_s,
+                      keep_claims=keep)
+    return sorted(set(before) - set(manifest_generations(path, fs=fs)))
 
 
 def table_diff(before: DataFrame, after: DataFrame, keys: list[str],
@@ -2148,43 +2105,27 @@ def snapshot_cdc(spark: SparkSession, path: str, from_version: int,
     time-travel tables of snapshot_write) — "what changed between the
     corpus my last run trained on and today's?" answered as rows, not
     counts, without any log having been kept: the versions ARE the
-    log."""
-    return cdc_rows(snapshot_read(spark, path, from_version),
-                    snapshot_read(spark, path, to_version), keys,
-                    compare_cols=compare_cols)
+    log (manifested_cdc over their generations)."""
+    return manifested_cdc(spark, path, from_version, to_version, keys,
+                          compare_cols=compare_cols)
 
 
 def manifested_cdc(spark: SparkSession, path: str, from_gen: int,
                    to_gen: int, keys: list[str],
                    compare_cols: list[str] | None = None,
                    fs=None) -> DataFrame:
-    """CDC records between two generations of a POINTER-COMMIT table —
-    the claim chain is already a version log, so change feeds between
-    commits come free: diff the two generations' manifest-exact reads
-    (cdc_rows).  Both generations' claims must survive — retention is
-    vacuum_manifested(keep_claims=N).
+    """CDC records between two generations of a pointer table (the
+    claim chain is the version log): cdc_rows over the two
+    generations' manifest-exact reads.  Both claims must survive —
+    retention is vacuum_manifested(keep_claims=N).
 
-    The diff is automatically CHANGE-BOUNDED when it can be: both
-    reads prune to the partition dirs whose manifest entries DIFFER
-    between the two generations (identical entries mean identical
-    committed files — byte-identical partitions cannot contribute CDC
-    rows), so at the 100 TB target a one-partition commit diffs one
-    partition, not the table.  The join inside each changed partition
-    remains a full outer join of that partition's two states."""
+    The diff is CHANGE-BOUNDED: both reads prune to the entry dirs
+    whose manifest entries DIFFER (identical entries are identical
+    files and cannot contribute rows), so a one-partition commit
+    diffs one partition, not the table."""
     fs = _resolve_fs(path, fs)
-
-    def _man_at(gen):
-        head = read_commit(path, fs=fs)
-        if head is not None and int(head["generation"]) == int(gen):
-            return head
-        cf = _claim_file(path, int(gen))
-        if not fs.exists(cf):
-            raise ValueError(
-                f"manifested_cdc: generation {int(gen)} not available "
-                f"at {path} (live: {manifest_generations(path, fs=fs)})")
-        return json.loads(fs.read_text(cf))
-
-    man_a, man_b = _man_at(from_gen), _man_at(to_gen)
+    man_a, man_b = (_manifest_at(path, int(g), fs, "manifested_cdc")
+                    for g in (from_gen, to_gen))
     pa, pb = man_a["partitions"], man_b["partitions"]
     changed = sorted(d for d in set(pa) | set(pb)
                      if pa.get(d) != pb.get(d))
@@ -2192,19 +2133,14 @@ def manifested_cdc(spark: SparkSession, path: str, from_gen: int,
     def _read(man, dirs):
         files = manifest_files(man, path, fs=fs, dirs=dirs)
         if not files:
-            # a side with no files in the changed dirs (e.g. the dirs
-            # were created after `from_gen`): zero rows, schema from
-            # the generation's full read
+            # a side with no files in the changed dirs (the dirs were
+            # created after `from_gen`, or nothing changed): zero rows,
+            # schema from the generation's full read
             return read_manifested(spark, path, fs=fs,
                                    generation=man["generation"]) \
                 .where(F.lit(False))
         return spark.read.option("basePath", path).parquet(*files)
 
-    if not changed:
-        empty = read_manifested(spark, path, fs=fs,
-                                generation=int(to_gen)) \
-            .where(F.lit(False))
-        return cdc_rows(empty, empty, keys, compare_cols=compare_cols)
     return cdc_rows(_read(man_a, changed), _read(man_b, changed), keys,
                     compare_cols=compare_cols)
 
@@ -2238,16 +2174,8 @@ def overwrite_partitions(spark: SparkSession, path: str, df: DataFrame,
             "overwrite_partitions: multi-column partition specs are "
             "pointer-protocol only; use commit='pointer'")
     if commit == "pointer":
-        if man is None:
-            if fs.isdir(path):
-                man = manifest_bootstrap(path, partition_col, fs=fs)
-            else:
-                (df.hint("rebalance", *pcols)  # guide §6
-                 .write.mode("overwrite").partitionBy(*pcols)
-                 .parquet(path))
-                return sorted(
-                    manifest_bootstrap(path, partition_col,
-                                       fs=fs)["partitions"])
+        man = _pointer_base(path, partition_col, man, fs,
+                            "overwrite_partitions")
         dirs = _append_and_flip(spark, path, df, partition_col, man, fs,
                                 rebase=rebase)
         _refresh_zonemap_if_present(spark, path, fs)
@@ -2313,13 +2241,8 @@ def delete_where(spark: SparkSession, path: str, predicate: Column,
         raise ValueError(
             "delete_where: multi-column partition specs are "
             "pointer-protocol only; use commit='pointer'")
-    if commit == "pointer" and man is None:
-        man = manifest_bootstrap(path, partition_col, fs=fs)
     if commit == "pointer":
-        if _man_pcols(man) != pcols:
-            raise ValueError(
-                f"delete_where: table at {path} is committed on "
-                f"{man['partition_col']}, not {partition_col}")
+        man = _pointer_base(path, partition_col, man, fs, "delete_where")
         full = read_manifested(spark, path, fs=fs)
     else:
         recover_table(path, fs=fs)
@@ -2386,19 +2309,9 @@ def delete_where(spark: SparkSession, path: str, predicate: Column,
         # ONE manifest flip commits rewrites AND whole-partition
         # drops together — no reader ever sees a partial delete
         if nonempty_dirs:
-            pre = {d: set(_part_files(fs, path, d))
-                   for d in nonempty_dirs}
-            (_merge_write_layout(spark, path, kept, pcols, fs)
-             .write.mode("append").partitionBy(*pcols)
-             .parquet(path))
-            for d in nonempty_dirs:
-                fresh = sorted(set(_part_files(fs, path, d)) - pre[d])
-                if not fresh:
-                    raise RuntimeError(
-                        f"delete_where: no new files under {d!r} "
-                        "after append; manifest NOT flipped "
-                        "(table unchanged)")
-                _set_dir_files(man, path, d, fresh, fs)
+            _append_dirs(path,
+                         _merge_write_layout(spark, path, kept, pcols, fs),
+                         pcols, nonempty_dirs, man, fs, "delete_where")
         for d in empty_dirs:
             man["partitions"][d] = []
         man["generation"] = int(man["generation"]) + 1

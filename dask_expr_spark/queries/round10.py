@@ -5,7 +5,7 @@ recomputing: logical conflict detection on the generation CAS),
 generation TIME TRAVEL over the claim chain (the pointer table's
 version log, retained by vacuum_manifested(keep_claims=N)), change
 feeds BETWEEN generations (manifested_cdc), and the bloom move-guard
-index committed through the snapshot CAS so
+index committed through the pointer log so
 upsert_partitioned(commit='pointer', key_bloom_path=...) works on
 object stores.
 
@@ -268,7 +268,7 @@ def cdc_between_generations(spark, sf_dir):
 
 # -- pointer-committed bloom key index (VERDICT r9 item 5): the move
 #    guard's bloom prefilter now works under commit='pointer' (the
-#    index commits through the snapshot CAS, updated before the table
+#    index commits through the pointer log, updated before the table
 #    claim).  Booleans pin: the insert-only batch skipped the
 #    full-table key scan, a partition-moving update was still
 #    rejected, and the guard's exact fallback ran exactly once --------

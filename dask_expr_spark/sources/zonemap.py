@@ -142,9 +142,9 @@ def _footer_scan(spark: SparkSession, files: list[str],
 def _write_manifest(manifest: DataFrame, zp: str, fs) -> None:
     """Persist the zone-map manifest with the protocol the filesystem
     supports: the rename-aside swap on POSIX/HDFS, or — on object
-    stores, the regime zone maps actually target — a snapshot-style
-    versioned commit (immutable version dir + one atomic pointer
-    write), vacuumed down to the live version."""
+    stores, the regime zone maps actually target — a snapshot commit
+    through the pointer log (immutable version dir + one exclusive
+    claim), vacuumed down to the live version and one prior."""
     from ..functions.maintenance import (atomic_overwrite,
                                          snapshot_vacuum,
                                          snapshot_write)
@@ -163,8 +163,8 @@ def _write_manifest(manifest: DataFrame, zp: str, fs) -> None:
 
 
 def _read_manifest_df(spark: SparkSession, zp: str, fs) -> DataFrame:
-    from ..functions.maintenance import _read_manifest, snapshot_read
-    if _read_manifest(zp, fs=fs) is not None:
+    from ..functions.maintenance import read_commit, snapshot_read
+    if read_commit(zp, fs=fs) is not None:
         return snapshot_read(spark, zp)
     return spark.read.parquet(zp)
 

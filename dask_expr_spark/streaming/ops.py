@@ -791,7 +791,7 @@ def upsert_sink(stream: DataFrame, table_path: str, keys: list,
                 if commit == "pointer" and partition_col:
                     manifest_bootstrap(table_path, partition_col)
                     if key_bloom_path is not None:
-                        # seed the snapshot-committed bloom with the
+                        # seed the pointer-log bloom with the
                         # first batch's keys so the very next merge's
                         # move guard is already map-only
                         from ..functions.maintenance import \

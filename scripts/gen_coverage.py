@@ -538,10 +538,11 @@ ROWS: list[tuple[str, list[dict]]] = [
                 "retention guards in-flight writers AND claim "
                 "deletion; claims newer than the resolved head are "
                 "never touched); row-level delete_where with "
-                "whole-dir drops; bloom move-guard index committed "
-                "through the snapshot CAS (key_bloom_path works "
-                "under commit='pointer', bloom-before-claim "
-                "ordering); zone maps refresh inline after EVERY "
+                "whole-dir drops; bloom move-guard index is a "
+                "pointer-log table of segment entries (key_bloom_path "
+                "works under commit='pointer', bloom-before-claim "
+                "ordering, disjoint guarded upserts rebase and share "
+                "it); zone maps refresh inline after EVERY "
                 "mutator",
              loc="dask_expr_spark/functions/maintenance.py "
                  "(read_commit, _write_commit, _set_dir_files, "
@@ -566,15 +567,16 @@ ROWS: list[tuple[str, list[dict]]] = [
                "test_fsops; 10^5-file commit + rebase + retention "
                "probes scripts/scale_probe_r9.py + scale_probe_r10.py"
                " -> SCALE.md (flat across table decades)"),
-        dict(op="versioned snapshots with TIME TRAVEL: uniquely-named "
-                "immutable version directories committed by the same "
-                "exclusive-claim CAS (_manifest.{n}.json — concurrent "
-                "snapshot writers serialize, the loser raises and "
-                "retries as the next version), probe-forward pointer "
-                "cache, history log, vacuum (drops versions + claims "
-                "+ crashed writers' orphan dirs) — a writer crash at "
-                "any point leaves the previous version live; a crash "
-                "after the claim leaves the version COMMITTED",
+        dict(op="versioned snapshots with TIME TRAVEL: tables of the "
+                "pointer log whose one entry per generation is a "
+                "uniquely-named immutable version directory "
+                "(_commit.{n}.json claim — concurrent snapshot writers "
+                "serialize, the loser raises and retries as the next "
+                "version), probe-forward pointer cache, history log, "
+                "vacuum (drops versions + claims + crashed writers' "
+                "orphan dirs) — a writer crash at any point leaves the "
+                "previous version live; a crash after the claim leaves "
+                "the version COMMITTED",
              loc="dask_expr_spark/functions/maintenance.py "
                  "(snapshot_write, snapshot_read, snapshot_vacuum, "
                  "snapshot_version_dir)",

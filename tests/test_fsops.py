@@ -30,6 +30,11 @@ def _rows(df):
     return sorted((r["k"], r["v"], r["part"]) for r in df.collect())
 
 
+def _head_entries(path):
+    """Entry dirs (dense index or sparse segments) in a bloom head."""
+    return len(M.read_commit(path)["partitions"])
+
+
 class FakeObjectStoreFS(fsops.PosixFS):
     """PosixFS masquerading as an object store: rename FORBIDDEN
     (raises — proving the pointer protocol never needs one), and the
@@ -1024,7 +1029,7 @@ def test_snapshot_write_concurrent_loser_raises(spark, tmp_path,
     state = {"fired": False}
 
     def inject(self, p, text):
-        if not state["fired"] and "_manifest." in os.path.basename(p):
+        if not state["fired"] and M._CLAIM_RE.match(os.path.basename(p)):
             state["fired"] = True
             M.snapshot_write(
                 spark.createDataFrame(pd.DataFrame(
@@ -1552,7 +1557,8 @@ def test_vacuum_min_age_guards_claim_files(spark, tmp_path):
 def test_snapshot_vacuum_age_guards_orphan_sweep(spark, tmp_path):
     """ADVICE item: an orphan-LOOKING young _v dir (an in-flight
     writer whose target version was overtaken) survives an age-guarded
-    snapshot_vacuum and is only swept once older than the window."""
+    snapshot_vacuum and is only swept once older than the window.  The
+    same window keeps the young `_commit.{n}.json` claims."""
     path = str(tmp_path / "snap")
     df = spark.createDataFrame(pd.DataFrame({"k": [1], "v": [1.0]}))
     for _ in range(3):
@@ -1564,6 +1570,7 @@ def test_snapshot_vacuum_age_guards_orphan_sweep(spark, tmp_path):
         f.write(b"PAR1")
     M.snapshot_vacuum(path, keep=1, min_age_s=3600)
     assert os.path.isdir(orphan)                  # young: protected
+    assert M.manifest_generations(path) == [0, 1, 2]
     old = __import__("time").time() - 7200
     os.utime(orphan, (old, old))
     M.snapshot_vacuum(path, keep=1, min_age_s=3600)
@@ -1575,7 +1582,7 @@ def test_snapshot_vacuum_age_guards_orphan_sweep(spark, tmp_path):
 def test_pointer_bloom_skips_scan_for_inserts(spark, tmp_path,
                                               monkeypatch):
     """key_bloom_path now works under commit='pointer' (the bloom
-    commits through the snapshot CAS — no renames): a pure-insert
+    commits through the pointer log — no renames): a pure-insert
     batch skips the full-table key scan, a genuine move is still
     rejected via the exact fallback."""
     path = str(tmp_path / "t")
@@ -1612,8 +1619,9 @@ def test_pointer_bloom_skips_scan_for_inserts(spark, tmp_path,
 def test_pointer_bloom_no_false_negatives_across_upserts(spark,
                                                          tmp_path):
     """keys inserted through the guarded pointer path land in the
-    snapshot bloom, so a later move attempt is still rejected — and
-    old bloom versions retire (keep=2) instead of accumulating."""
+    pointer-log bloom, so a later move attempt is still rejected — and
+    the bloom head holds the bootstrap entry plus one segment, not a
+    growing pile of full indexes."""
     path = str(tmp_path / "t")
     bloom = str(tmp_path / "bloom")
     _mk(spark, path)
@@ -1634,7 +1642,7 @@ def test_pointer_bloom_no_false_negatives_across_upserts(spark,
             M.upsert_partitioned(spark, path, mover, ["k"], "part",
                                  commit="pointer",
                                  key_bloom_path=bloom)
-    assert len(M.snapshot_history(bloom)) <= 2    # versions retired
+    assert _head_entries(bloom) <= 2              # bootstrap + segment
 
 
 def test_pointer_bloom_updates_before_claim(spark, tmp_path,
@@ -1651,9 +1659,12 @@ def test_pointer_bloom_updates_before_claim(spark, tmp_path,
     M.manifest_bootstrap(path, "part")
     M.bloom_append_snapshot(spark, bloom,
                             M.read_manifested(spark, path), ["k"])
+    real = M._write_commit
 
     def boom(path_, man_, fs_, **kw):
-        raise RuntimeError("injected crash at claim")
+        if path_ == path:            # the table's claim, not the bloom's
+            raise RuntimeError("injected crash at claim")
+        return real(path_, man_, fs_, **kw)
 
     monkeypatch.setattr(M, "_write_commit", boom)
     batch = spark.createDataFrame(pd.DataFrame({
@@ -1733,7 +1744,7 @@ def test_upsert_sink_pointer_with_bloom_guard(spark, tmp_path,
     got = sorted(r["k"] for r in
                  M.read_manifested(spark, tbl).collect())
     assert got == list(range(24))
-    assert len(M.snapshot_history(bloom)) >= 1
+    assert _head_entries(bloom) >= 1
 
 
 def test_pointer_bloom_lsm_segments_and_compaction(spark, tmp_path,
@@ -1741,25 +1752,25 @@ def test_pointer_bloom_lsm_segments_and_compaction(spark, tmp_path,
     """Round-10 optimization: guarded-upsert bloom maintenance is an
     LSM segment append (O(batch·k) sparse positions per commit, not
     an O(index-bits) dense rewrite).  Pins: (1) steady-state appends
-    add one snapshot version each and the delta version carries
-    sparse `pos` rows, no dense bitmap; (2) every key inserted across
-    the segmented window still probes TRUE (no false negative crosses
-    a segment boundary); (3) crossing SPARK_GRAFT_BLOOM_SEG_MAX folds
-    the list into one dense version and retires the segments; (4) the
-    fold equals the direct dense build bit-for-bit."""
+    add one head entry each and the delta entry carries sparse `pos`
+    rows, no dense bitmap; (2) every key inserted across the
+    segmented window still probes TRUE (no false negative crosses a
+    segment boundary); (3) crossing BLOOM_SEG_MAX folds the entries
+    into one dense entry and retires the segments; (4) the fold
+    equals the direct dense build bit-for-bit."""
     from pyspark.sql import functions as F
 
     from dask_expr_spark.functions.sketches import (
         bloom_index, bloom_probe)
 
-    monkeypatch.setenv("SPARK_GRAFT_BLOOM_SEG_MAX", "3")
+    monkeypatch.setattr(M, "BLOOM_SEG_MAX", 3)
     path = str(tmp_path / "t")
     bloom = str(tmp_path / "bloom")
     _mk(spark, path)
     M.manifest_bootstrap(path, "part")
     M.bloom_append_snapshot(spark, bloom,
                             M.read_manifested(spark, path), ["k"])
-    assert len(M.snapshot_history(bloom)) == 1
+    assert _head_entries(bloom) == 1
 
     inserted = []
     for i in range(2):                      # segments 1 and 2
@@ -1769,9 +1780,8 @@ def test_pointer_bloom_lsm_segments_and_compaction(spark, tmp_path,
             "k": ks, "v": [1.0, 2.0], "part": ["a", "b"]}))
         M.upsert_partitioned(spark, path, batch, ["k"], "part",
                              commit="pointer", key_bloom_path=bloom)
-    hist = M.snapshot_history(bloom)
-    assert len(hist) == 3                   # bootstrap + 2 segments
-    seg_dir = M.snapshot_version_dir(bloom, int(hist[-1]["version"]))
+    assert _head_entries(bloom) == 3        # bootstrap + 2 segments
+    seg_dir = os.path.join(bloom, max(M.read_commit(bloom)["partitions"]))
     seg = spark.read.parquet(seg_dir)
     assert "pos" in seg.columns and "words" not in seg.columns
     # all keys (table + both segments) probe TRUE via the folded read
@@ -1786,8 +1796,8 @@ def test_pointer_bloom_lsm_segments_and_compaction(spark, tmp_path,
         "k": [2000], "v": [3.0], "part": ["c"]}))
     M.upsert_partitioned(spark, path, batch, ["k"], "part",
                          commit="pointer", key_bloom_path=bloom)
-    hist = M.snapshot_history(bloom)
-    assert len(hist) == 1                   # compacted + retired
+    assert _head_entries(bloom) == 1        # compacted
+    assert len(M.manifest_generations(bloom)) == 1     # + retired
     compacted = M.read_key_bloom(spark, bloom)
     assert "words" in compacted.columns
     # fold == direct dense build of the same key set, bit-for-bit
@@ -1808,7 +1818,7 @@ def test_bloom_hash_stamp_gates_stale_indexes(spark, tmp_path):
     the current hashes: read_key_bloom refuses it (guard falls back to
     the exact scan), bloom_append rebuilds the plain-dir index under
     the current hash, and bloom_append_snapshot re-bootstraps the
-    snapshot index instead of appending a mixed-hash segment."""
+    pointer-log index instead of appending a mixed-hash segment."""
     from pyspark.sql import functions as F
 
     from dask_expr_spark.functions.sketches import BF_HASH, bloom_index
@@ -1835,7 +1845,7 @@ def test_bloom_hash_stamp_gates_stale_indexes(spark, tmp_path):
         .withColumn("__s", F.col("k").cast("string")), idx, "__s")
     assert all(r["maybe_in_index"] for r in probed.collect())
 
-    # --- snapshot CAS protocol ----------------------------------------
+    # --- pointer-log entry table ---------------------------------------
     snap = str(tmp_path / "bloom_snap")
     M.snapshot_write(bloom_index(keys, "__k").drop("hash"), snap)
     assert M.read_key_bloom(spark, snap) is None       # refused
@@ -1850,4 +1860,283 @@ def test_bloom_hash_stamp_gates_stale_indexes(spark, tmp_path):
         spark.createDataFrame(pd.DataFrame({"k": [1, 2, 3, 9]}))
         .withColumn("__s", F.col("k").cast("string")), idx2, "__s")
     assert all(r["maybe_in_index"] for r in probed2.collect())
-    assert len(M.snapshot_history(snap)) == 1          # stale retired
+    assert _head_entries(snap) == 1                    # stale replaced
+    assert len(M.manifest_generations(snap)) == 1      # and retired
+
+
+# ------------------------------- one version log: every entry shape
+
+def test_interleaved_guarded_upserts_share_one_bloom(spark, tmp_path,
+                                                     monkeypatch):
+    """Two guarded pointer upserts on DISJOINT partitions share one
+    bloom.  Writer A's whole upsert runs at writer B's bloom claim
+    point, after B's slice append (the injected ordering keeps the
+    two appends apart).  B's bloom segment and B's table claim both
+    rebase onto A's commits, so both batches land and every key of
+    both probes TRUE in the shared bloom."""
+    import threading
+
+    from pyspark.sql import functions as F
+
+    from dask_expr_spark.functions.sketches import bloom_probe
+
+    path = str(tmp_path / "t")
+    bloom = str(tmp_path / "bloom")
+    _mk(spark, path)
+    M.manifest_bootstrap(path, "part")
+    M.bloom_append_snapshot(spark, bloom,
+                            M.read_manifested(spark, path), ["k"])
+    batch_a = spark.createDataFrame(pd.DataFrame(
+        {"k": [100, 101], "v": [1.0, 2.0], "part": ["a", "a"]}))
+    batch_b = spark.createDataFrame(pd.DataFrame(
+        {"k": [200, 201], "v": [3.0, 4.0], "part": ["b", "b"]}))
+    appended = threading.Event()
+    real_flip = M._append_and_flip
+    real_claim = fsops.PosixFS.write_text_exclusive
+    state = {"fired": False}
+
+    def flip(*a, before_claim=None, **kw):
+        def barrier():
+            appended.set()               # B's slice append is done
+            before_claim()
+        return real_flip(*a, before_claim=barrier, **kw)
+
+    def claim(self, p, text):
+        if not state["fired"] and os.path.dirname(p) == bloom:
+            state["fired"] = True        # B's bloom claim: run A first
+            assert appended.wait(300)
+            M.upsert_partitioned(spark, path, batch_a, ["k"], "part",
+                                 commit="pointer", key_bloom_path=bloom)
+        return real_claim(self, p, text)
+
+    monkeypatch.setattr(M, "_append_and_flip", flip)
+    monkeypatch.setattr(fsops.PosixFS, "write_text_exclusive", claim)
+    M.upsert_partitioned(spark, path, batch_b, ["k"], "part",
+                         commit="pointer", key_bloom_path=bloom)
+    monkeypatch.undo()
+    assert state["fired"]
+    got = _rows(M.read_manifested(spark, path))
+    for row in [(100, 1.0, "a"), (101, 2.0, "a"),
+                (200, 3.0, "b"), (201, 4.0, "b")]:
+        assert row in got
+    assert _head_entries(bloom) == 3     # bootstrap + A's + B's segment
+    probe = spark.createDataFrame(pd.DataFrame(
+        {"__mg_key": ["100", "101", "200", "201"]}))
+    hits = bloom_probe(probe, M.read_key_bloom(spark, bloom), "__mg_key",
+                       result_col="__maybe")
+    assert hits.where(~F.col("__maybe")).count() == 0
+
+
+def test_bloom_fold_between_segment_write_and_claim(spark, tmp_path,
+                                                    monkeypatch):
+    """Writer A appends and FOLDS between writer B's segment write and
+    B's claim.  The fold retires the claims B's walk would pass and
+    deletes only the entries it replaced: B's unclaimed segment
+    survives, B's re-created stale claim is withdrawn, and B lands on
+    top of the fold.  Every key of the table and both batches then
+    probes TRUE."""
+    from pyspark.sql import functions as F
+
+    from dask_expr_spark.functions.sketches import bloom_probe
+
+    path = str(tmp_path / "t")
+    bloom = str(tmp_path / "bloom")
+    _mk(spark, path)
+    monkeypatch.setattr(M, "BLOOM_SEG_MAX", 1)
+    M.bloom_append_snapshot(spark, bloom,
+                            spark.read.parquet(path), ["k"])
+    batch_a = spark.createDataFrame(pd.DataFrame({"k": [100, 101]}))
+    batch_b = spark.createDataFrame(pd.DataFrame({"k": [200, 201]}))
+    real_claim = fsops.PosixFS.write_text_exclusive
+    state = {"fired": False}
+
+    def claim(self, p, text):
+        if not state["fired"] and os.path.dirname(p) == bloom:
+            state["fired"] = True        # B's segment claim: A first
+            M.bloom_append_snapshot(spark, bloom, batch_a, ["k"])
+            assert M.manifest_generations(bloom) == [2]   # A folded
+        return real_claim(self, p, text)
+
+    monkeypatch.setattr(fsops.PosixFS, "write_text_exclusive", claim)
+    M.bloom_append_snapshot(spark, bloom, batch_b, ["k"])
+    assert state["fired"]
+    # B's segment landed at 3 (over the fold at 2), then B folded at 4
+    assert M.manifest_generations(bloom) == [4]
+    assert _head_entries(bloom) == 1
+    keys = [str(k) for k in [*range(30), 100, 101, 200, 201]]
+    probe = spark.createDataFrame(pd.DataFrame({"__mg_key": keys}))
+    hits = bloom_probe(probe, M.read_key_bloom(spark, bloom), "__mg_key",
+                       result_col="__maybe")
+    assert hits.where(~F.col("__maybe")).count() == 0
+
+
+def test_claim_below_vacuumed_head_is_withdrawn(spark, tmp_path):
+    """A writer whose base generation was vacuumed away re-creates a
+    retired claim below the head.  That commit would be invisible
+    (readers probe forward from the newer cache), so the claim is
+    withdrawn and the writer raises instead of reporting success."""
+    path = _gen_table(spark, tmp_path)
+    fs = fsops.PosixFS()
+    stale = M._manifest_at(path, 0, fs, "test")
+    M.vacuum_manifested(path)
+    assert M.manifest_generations(path) == [2]
+    with pytest.raises(M.ConcurrentCommitError, match="retired"):
+        M._write_commit(path, {**stale, "generation": 1}, fs,
+                        touched=["part=a"])
+    assert M.manifest_generations(path) == [2]
+    assert int(M.read_commit(path)["generation"]) == 2
+
+
+def test_racing_bloom_bootstraps_loser_raises(spark, tmp_path,
+                                              monkeypatch):
+    """Two dense bloom bootstraps never both land: their m_bits and
+    shards follow their own key counts, and indexes of different
+    sizes cannot be OR-folded.  The loser raises, its entry dir is
+    deleted, and the winner's bloom reads and probes its keys TRUE."""
+    from pyspark.sql import functions as F
+
+    from dask_expr_spark.functions.sketches import bloom_probe
+
+    bloom = str(tmp_path / "bloom")
+    small = spark.createDataFrame(pd.DataFrame({"k": [1, 2]}))
+    large = spark.createDataFrame(pd.DataFrame({"k": list(range(100))}))
+    real_claim = fsops.PosixFS.write_text_exclusive
+    state = {"fired": False}
+
+    def claim(self, p, text):
+        if not state["fired"] and os.path.dirname(p) == bloom:
+            state["fired"] = True        # the small bootstrap's claim
+            M.bloom_append_snapshot(spark, bloom, large, ["k"])
+        return real_claim(self, p, text)
+
+    monkeypatch.setattr(fsops.PosixFS, "write_text_exclusive", claim)
+    with pytest.raises(M.ConcurrentCommitError):
+        M.bloom_append_snapshot(spark, bloom, small, ["k"])
+    monkeypatch.undo()
+    assert M.manifest_generations(bloom) == [0]
+    assert len([d for d in os.listdir(bloom) if d.startswith("_v")]) == 1
+    probe = spark.createDataFrame(pd.DataFrame(
+        {"__mg_key": [str(k) for k in range(100)]}))
+    hits = bloom_probe(probe, M.read_key_bloom(spark, bloom), "__mg_key",
+                       result_col="__maybe")
+    assert hits.where(~F.col("__maybe")).count() == 0
+
+
+def test_legacy_snapshot_log_is_refused(spark, tmp_path):
+    """A snapshot table of the retired `_manifest.{n}.json` log (no
+    `_commit.*` claim) is refused loudly by readers, writers and
+    vacuum — never read as an empty table — and nothing is written
+    into it."""
+    path = str(tmp_path / "legacy")
+    vdir = "_v00000000-0123abcd"
+    df = spark.createDataFrame(pd.DataFrame({"k": [1], "v": [1.0]}))
+    df.write.parquet(os.path.join(path, vdir))
+    entry = {"version": 0, "dir": vdir}
+    with open(os.path.join(path, "_manifest.00000000.json"), "w") as f:
+        f.write(json.dumps(entry))
+    with open(os.path.join(path, "_manifest.json"), "w") as f:
+        f.write(json.dumps({"current": 0, "versions": [entry]}))
+    before = sorted(os.listdir(path))
+    for call in (lambda: M.snapshot_read(spark, path),
+                 lambda: M.snapshot_write(df, path),
+                 lambda: M.snapshot_history(path),
+                 lambda: M.snapshot_vacuum(path, keep=1),
+                 lambda: M.read_key_bloom(spark, path),
+                 lambda: M.bloom_append_snapshot(spark, path, df, ["k"])):
+        with pytest.raises(ValueError, match="retired snapshot-log"):
+            call()
+    assert sorted(os.listdir(path)) == before
+
+
+def _parquet_on_disk(path):
+    return {os.path.join(root, f)
+            for root, _dirs, files in os.walk(path) for f in files
+            if f.endswith(".parquet") and not f.startswith((".", "_"))}
+
+
+@pytest.mark.parametrize("point", ["claim", "cache"])
+@pytest.mark.parametrize("shape", ["hive", "snapshot", "bloom"])
+def test_cas_crash_injection_every_entry_shape(spark, tmp_path,
+                                               monkeypatch, shape,
+                                               point):
+    """One crash-injection set for the pointer log's CAS over all
+    three entry shapes: a hive partition dir (pointer upsert), a
+    snapshot version (snapshot_write) and a bloom segment
+    (bloom_append_snapshot).  A crash AT the exclusive
+    `_commit.{N}.json` claim leaves the previous generation live and
+    the new data invisible; the retry lands, and vacuum clears the
+    crashed write's orphans.  A crash AFTER the claim, before the
+    `_commit.json` cache refresh, leaves the commit live: readers
+    probe forward to it."""
+    from dask_expr_spark.functions.sketches import bloom_probe
+
+    path = str(tmp_path / "t")
+    if shape == "hive":
+        _mk(spark, path)
+        M.manifest_bootstrap(path, "part")
+        batch = spark.createDataFrame(pd.DataFrame(
+            {"k": [2], "v": [77.0], "part": ["c"]}))
+
+        def write():
+            M.upsert_partitioned(spark, path, batch, ["k"], "part",
+                                 commit="pointer")
+
+        def landed():
+            return (2, 77.0, "c") in _rows(M.read_manifested(spark, path))
+    elif shape == "snapshot":
+        M.snapshot_write(spark.createDataFrame(
+            pd.DataFrame({"k": [1], "v": [1.0]})), path)
+        nxt = spark.createDataFrame(pd.DataFrame({"k": [2], "v": [2.0]}))
+
+        def write():
+            M.snapshot_write(nxt, path)
+
+        def landed():
+            return [r["k"] for r in
+                    M.snapshot_read(spark, path).collect()] == [2]
+    else:
+        M.bloom_append_snapshot(spark, path, spark.createDataFrame(
+            pd.DataFrame({"k": list(range(10))})), ["k"])
+        delta = spark.createDataFrame(pd.DataFrame({"k": [777]}))
+
+        def write():
+            M.bloom_append_snapshot(spark, path, delta, ["k"])
+
+        def landed():
+            if _head_entries(path) != 2:           # bootstrap + segment
+                return False
+            probe = spark.createDataFrame(pd.DataFrame({"__k": ["777"]}))
+            return bool(bloom_probe(probe, M.read_key_bloom(spark, path),
+                                    "__k").first()["maybe_in_index"])
+
+    if point == "claim":
+        real = fsops.PosixFS.write_text_exclusive
+
+        def crash(self, p, text):
+            if M._CLAIM_RE.match(os.path.basename(p)):
+                raise RuntimeError("injected crash at the claim")
+            return real(self, p, text)
+        monkeypatch.setattr(fsops.PosixFS, "write_text_exclusive", crash)
+    else:
+        real = fsops.PosixFS.write_text_atomic
+
+        def crash(self, p, text):
+            if os.path.basename(p) == "_commit.json":
+                raise RuntimeError("injected crash after the claim")
+            return real(self, p, text)
+        monkeypatch.setattr(fsops.PosixFS, "write_text_atomic", crash)
+    gen = int(M.read_commit(path)["generation"])
+    with pytest.raises(RuntimeError, match="injected crash"):
+        write()
+    monkeypatch.undo()
+    if point == "claim":
+        assert int(M.read_commit(path)["generation"]) == gen
+        assert not landed()
+        write()                                    # the retry lands
+    assert int(M.read_commit(path)["generation"]) == gen + 1
+    assert landed()
+    if point == "claim":
+        assert M.vacuum_manifested(path) > 0       # orphans + superseded
+        head = M.read_commit(path)
+        assert _parquet_on_disk(path) == set(M.manifest_files(head, path))
+        assert landed()

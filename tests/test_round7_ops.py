@@ -907,13 +907,13 @@ def test_split_temporal_semantics(spark, sf_dir):
 
 def test_snapshot_write_crash_before_flip(spark, tmp_path,
                                           monkeypatch):
-    """snapshot commit protocol (round-9 CAS semantics): the commit
-    point is the EXCLUSIVE claim of `_manifest.{n}.json`.  A crash
+    """snapshot commit protocol (the pointer log's CAS): the commit
+    point is the EXCLUSIVE claim of `_commit.{n}.json`.  A crash
     BEFORE the claim (injected at os.link, the PosixFS exclusive-
     publish primitive) leaves the previous version live and the
     written directory an invisible orphan; a retry commits cleanly
     and takes the number.  A crash AFTER the claim but before the
-    `_manifest.json` cache refresh (injected at os.replace) leaves
+    `_commit.json` cache refresh (injected at os.replace) leaves
     the version COMMITTED — probe-forward readers resolve it."""
     path = str(tmp_path / "snap")
     v0 = spark.createDataFrame([(1, 1.0), (2, 2.0)], "k int, p double")
@@ -948,7 +948,7 @@ def test_snapshot_write_crash_before_flip(spark, tmp_path,
     real_replace = os.replace
 
     def boom_replace(src, dst):
-        if dst.endswith("_manifest.json"):
+        if dst.endswith("_commit.json"):
             raise RuntimeError("injected crash after the claim")
         return real_replace(src, dst)
 
@@ -965,9 +965,10 @@ def test_snapshot_write_crash_before_flip(spark, tmp_path,
 
 def test_snapshot_vacuum_crash_mid_delete(spark, tmp_path,
                                           monkeypatch):
-    """vacuum flips the manifest BEFORE deleting: a crash mid-delete
-    strands directories (reclaimable by re-running vacuum) but never
-    dangles a pointer — every manifest-listed version stays
+    """vacuum refreshes the `_commit.json` cache and retires the old
+    `_commit.{n}.json` claims BEFORE deleting directories: a crash
+    mid-delete strands directories (reclaimable by re-running vacuum)
+    but never dangles a pointer — every claimed version stays
     readable."""
     import shutil as _sh
 
@@ -987,9 +988,12 @@ def test_snapshot_vacuum_crash_mid_delete(spark, tmp_path,
         M.snapshot_vacuum(path, keep=1)
     monkeypatch.setattr(_sh, "rmtree", real)
 
-    # the manifest committed: v0 and v1 are gone from history...
+    # the claims of v0 and v1 are gone from history...
     live = {v["version"] for v in M.snapshot_history(path)}
     assert live == {2}
+    assert sorted(f for f in os.listdir(path)
+                  if f.startswith("_commit.")) == [
+        "_commit.00000002.json", "_commit.json"]
     # ...and every listed version still reads (no dangling pointer)
     assert M.snapshot_read(spark, path, 2).count() == 1
     # the stranded directory is reclaimed by the next write cycle or
